@@ -266,6 +266,18 @@ def wait_for_quiet(tag: str, samples: dict) -> None:
         )
 
 
+def write_run_copy(runs_dir: str, name: str, detail: dict) -> str:
+    """Write the immutable per-run copy of the detail sidecar. Mode ``'x'``:
+    a second run that lands on the same name (same cpus/sf/second) raises
+    FileExistsError instead of overwriting the earlier run's record."""
+    os.makedirs(runs_dir, exist_ok=True)
+    path = os.path.join(runs_dir, name)
+    with open(path, "x") as fh:
+        json.dump(detail, fh, indent=1, sort_keys=True)
+        fh.write("\n")
+    return path
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -419,17 +431,13 @@ def main():
         "run_id": run_id,
     }
     runs_dir = os.path.join(os.path.dirname(detail_path), "bench_runs")
-    per_run_path = os.path.join(
-        runs_dir, f"BENCH_DETAIL_c{cpus}_sf{sf}_{run_id}.json"
-    )
     try:
         with open(detail_path, "w") as fh:
             json.dump(detail, fh, indent=1, sort_keys=True)
             fh.write("\n")
-        os.makedirs(runs_dir, exist_ok=True)
-        with open(per_run_path, "w") as fh:  # never overwritten by later runs
-            json.dump(detail, fh, indent=1, sort_keys=True)
-            fh.write("\n")
+        write_run_copy(runs_dir, f"BENCH_DETAIL_c{cpus}_sf{sf}_{run_id}.json", detail)
+    except FileExistsError:  # a per-run name collision must not pass silently
+        raise
     except OSError as exc:  # read-only checkout must not kill the bench line
         print(f"bench: could not write {detail_path}: {exc}", file=sys.stderr)
 

@@ -58,6 +58,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import plan_memo
+
 # Python str.split() separator semantics for the JVM: (?U) makes \s the
 # Unicode White_Space set; \x1c-\x1f adds the C0 separators str.split()
 # also breaks on. Same class the SimHash JVM plan pins (dedup.py:983).
@@ -252,12 +254,6 @@ def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return parts
 
 
-# memoized distinct-word counts per logical plan (semanticHash) — the same
-# table-statistics role _JACCARD_STATS_CACHE plays in dedup.py's cost-based
-# kernel selection; staleness caveat identical (decision quality only: both
-# join forms are result-identical)
-_WORD_STATS_CACHE: dict[int, int] = {}
-
 # broadcast the encoded distinct-word table only below this many distinct
 # words (~100 bytes/row → ~200 MB at the cap — inside executor memory with
 # headroom). Real web corpora have 1e8–1e9 distinct whitespace tokens (URLs,
@@ -269,19 +265,10 @@ BROADCAST_MAX_WORDS = 2_000_000
 
 
 def _distinct_word_count(dw: DataFrame) -> int:
-    key = None
-    try:
-        key = dw.semanticHash()
-    except Exception:
-        pass
-    if key is not None and key in _WORD_STATS_CACHE:
-        return _WORD_STATS_CACHE[key]
-    n = dw.count()
-    if key is not None:
-        if len(_WORD_STATS_CACHE) >= 256:
-            _WORD_STATS_CACHE.clear()
-        _WORD_STATS_CACHE[key] = n
-    return n
+    """Distinct-word count that picks broadcast vs shuffle word joins,
+    memoized per logical plan (decision-only: both join forms are
+    result-identical)."""
+    return plan_memo("bpe.word_stats", dw, dw.count)
 
 
 def join_encoded_words(

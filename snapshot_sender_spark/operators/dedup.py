@@ -25,10 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..util import plan_memo, session_exprs
 from . import index_lifecycle
-
-# semanticHash -> scan partition count (decision-only, see _fanout_narrow)
-_FANOUT_PROBE_CACHE: dict[int, int] = {}
 
 
 def _pair_task_source(spark, n_tasks: int) -> DataFrame:
@@ -54,20 +52,8 @@ def _fanout_narrow(df: DataFrame) -> DataFrame:
     untouched — no exchange added at scale. The partition-count probe is
     memoized per logical plan (semanticHash), like the strategy-stats caches:
     decision-only, results identical either way."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    key = None
-    try:
-        key = df.semanticHash()
-    except Exception:
-        pass
-    n = _FANOUT_PROBE_CACHE.get(key) if key is not None else None
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        if key is not None:
-            if len(_FANOUT_PROBE_CACHE) >= 256:
-                _FANOUT_PROBE_CACHE.clear()
-            _FANOUT_PROBE_CACHE[key] = n
+    target = df.sparkSession.sparkContext.defaultParallelism
+    n = plan_memo("dedup.fanout_probe", df, lambda: df.rdd.getNumPartitions())
     return df.repartition(target) if n < target else df
 
 
@@ -156,7 +142,6 @@ def hashed_shingle_sets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     build — memoized per (JVM, text_col, id_col) via util.session_exprs
     (r14): a memo hit returns the identical Column objects, so the plan is
     unchanged by construction."""
-    from ..util import session_exprs
 
     def build() -> tuple:
         return (
@@ -167,7 +152,7 @@ def hashed_shingle_sets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         )
 
     id_c, sh_c = session_exprs(
-        df.sparkSession, f"dedup_shingle_cols:{text_col}:{id_col}", build
+        df.sparkSession, ("dedup_shingle_cols", text_col, id_col), build
     )
     return df.select(id_c, sh_c)
 
@@ -813,10 +798,6 @@ def incremental_jaccard_against_index(
     )
 
 
-# corpus-stats memo for the Jaccard strategy selector: semanticHash → stats
-_JACCARD_STATS_CACHE: dict[int, tuple] = {}
-
-
 def ngram_jaccard_pairs_gemm(
     df: DataFrame,
     text_col: str,
@@ -885,18 +866,10 @@ def ngram_jaccard_pairs_gemm(
     # caveat: like any cached statistic, a table REWRITTEN IN PLACE under the
     # same plan within one session reuses the old stats (decision quality
     # only — every strategy is result-identical).
-    cache_key = None
-    try:
-        cache_key = shingled.semanticHash()
-    except Exception:
-        pass
-    if cache_key is not None and cache_key in _JACCARD_STATS_CACHE:
-        n_docs, total_elems, vocab, sum_df2 = _JACCARD_STATS_CACHE[cache_key]
-    else:
+    def corpus_stats() -> tuple:
         stats = shingled.agg(
             F.count("*").alias("docs"), F.sum(F.size("shingles")).alias("elems")
         ).first()
-        total_elems = stats["elems"] or 0
         n_docs = stats["docs"] or 0
         dstats = (
             shingled.select(F.explode("shingles").alias("s"))
@@ -912,10 +885,11 @@ def ngram_jaccard_pairs_gemm(
         )
         vocab = (dstats["vocab"] if dstats else 0) or 0
         sum_df2 = (dstats["sum_df2"] if dstats else 0) or 0
-        if cache_key is not None:
-            if len(_JACCARD_STATS_CACHE) >= 256:
-                _JACCARD_STATS_CACHE.clear()
-            _JACCARD_STATS_CACHE[cache_key] = (n_docs, total_elems, vocab, sum_df2)
+        return n_docs, stats["elems"] or 0, vocab, sum_df2
+
+    n_docs, total_elems, vocab, sum_df2 = plan_memo(
+        "dedup.jaccard_stats", shingled, corpus_stats
+    )
     # Cost model (calibrated on the key-offset scale tiers, tools/scale_run.py):
     #   GEMM total work  = docs² · vocab / 2 dense flops — QUADRATIC in docs no
     #     matter how the blocks are cut, but with a BLAS-kernel constant;

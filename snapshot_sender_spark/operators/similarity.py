@@ -21,13 +21,10 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import plan_memo
 from . import index_lifecycle
 
 QUANT = 1_000_000  # 1e6 quantization — see module docstring
-
-# semanticHash -> corpus elems count for cosine_pairs_gemm's kernel selection
-# (decision-only; mirrors dedup._JACCARD_STATS_CACHE)
-_COSINE_STATS_CACHE: dict[int, int] = {}
 
 
 def _quant_dot_literal(vec_col, q: list[float]):
@@ -263,21 +260,12 @@ def cosine_pairs_gemm(
         ),
     )
     # Strategy-selection statistic, memoized per logical plan (semanticHash)
-    # exactly like dedup._JACCARD_STATS_CACHE: the role of cached table stats
-    # in a CBO — decision quality only, every strategy is result-identical.
-    cache_key = None
-    try:
-        cache_key = quant.semanticHash()
-    except Exception:
-        pass
-    if cache_key is not None and cache_key in _COSINE_STATS_CACHE:
-        elems = _COSINE_STATS_CACHE[cache_key]
-    else:
-        elems = quant.agg(F.sum(F.size("qv")).alias("elems")).first()["elems"] or 0
-        if cache_key is not None:
-            if len(_COSINE_STATS_CACHE) >= 256:
-                _COSINE_STATS_CACHE.clear()
-            _COSINE_STATS_CACHE[cache_key] = elems
+    # like the Jaccard corpus stats: the role of cached table stats in a
+    # CBO — decision quality only, every strategy is result-identical.
+    elems = plan_memo(
+        "similarity.cosine_stats", quant,
+        lambda: quant.agg(F.sum(F.size("qv")).alias("elems")).first()["elems"] or 0,
+    )
     if elems <= broadcast_max_elems:
         return _cosine_gemm_broadcast(quant, threshold, n_blocks)
     quant = quant.withColumn("block", F.pmod(F.col("id"), F.lit(n_blocks)).cast("int"))

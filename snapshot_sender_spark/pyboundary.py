@@ -34,7 +34,11 @@ pays the legacy cost once; every later task on that worker skips it.
 from __future__ import annotations
 
 import os
+import warnings
 import zipimport
+
+# wrapped collects without a daemon caller before the gc-freeze gate warns
+GC_FREEZE_WARN_AFTER = 50
 
 
 def install_zipimport_guard() -> bool:
@@ -101,6 +105,11 @@ def install_worker_gc_freeze() -> bool:
     runs the plain collect and must NOT freeze, or the task's in-flight
     data would be pinned in the permanent generation for the worker's
     lifetime.
+
+    Signal: if GC_FREEZE_WARN_AFTER wrapped collects pass without one from
+    ``pyspark/daemon.py`` (e.g. a pyspark upgrade moved the reuse loop), the
+    gate can never fire, and the wrapper emits one RuntimeWarning (to the
+    worker's stderr) instead of staying silent.
     """
     import sys
 
@@ -111,7 +120,7 @@ def install_worker_gc_freeze() -> bool:
     if getattr(gc, "_ssp_freeze_wrapper", False):
         return False
     orig = gc.collect
-    state = {"frozen": False}
+    state = {"frozen": False, "misses": 0}
     daemon_py = os.path.join("pyspark", "daemon.py")
 
     def collect(generation: int = 2) -> int:
@@ -124,6 +133,15 @@ def install_worker_gc_freeze() -> bool:
             if caller.endswith(daemon_py):
                 gc.freeze()
                 state["frozen"] = True
+            else:
+                state["misses"] += 1
+                if state["misses"] == GC_FREEZE_WARN_AFTER:
+                    warnings.warn(
+                        f"gc-freeze gate: {state['misses']} collects without a "
+                        f"{daemon_py} caller; the between-task freeze never fired",
+                        RuntimeWarning,
+                        stacklevel=2,
+                    )
         return n
 
     gc.collect = collect

@@ -24,12 +24,15 @@ this family generalizes the engine's own "BPE-ish regex" token counting
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..operators import bpe
 from ..tables import load
+from ..util import fingerprint, memo
 from . import query
 from .goldens import golden_oracle
 from .goldens_data import GOLDEN_DATA
@@ -47,18 +50,18 @@ _WS = (
 # sentinel rank for "no adjacent pair is ranked" — far above any real rank
 _INF = 4611686018427387904  # 2^62
 
-_MODEL_CACHE: dict[str, bpe.BpeModel] = {}
-
 
 def _model(spark: SparkSession, sf_dir: str) -> bpe.BpeModel:
-    """Train-once-per-process memo: every BPE query shares one model per
-    tier (training is deterministic, so this is a pure cache)."""
-    if sf_dir not in _MODEL_CACHE:
-        _MODEL_CACHE[sf_dir] = bpe.train_bpe(
+    """Train once per (session, tier): every BPE query shares one model
+    (training is deterministic); a rewritten documents table retrains."""
+    return memo(
+        "bpe_q.model", spark, (sf_dir,),
+        lambda: bpe.train_bpe(
             spark, load(spark, sf_dir, "documents"),
             num_merges=NUM_MERGES, max_words=MAX_WORDS,
-        )
-    return _MODEL_CACHE[sf_dir]
+        ),
+        lambda: fingerprint(os.path.join(sf_dir, "documents.parquet")),
+    )
 
 
 def _merges_values_sql() -> str | None:

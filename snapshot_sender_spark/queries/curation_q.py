@@ -658,7 +658,7 @@ def _canonical_url_cols(docs: DataFrame) -> DataFrame:
         return url, path, query, host, canon
 
     url, path, query, host, canon = session_exprs(
-        docs.sparkSession, "curation_canonical_url_cols", build
+        docs.sparkSession, ("curation_canonical_url_cols",), build
     )
     return (
         docs.withColumn("url", url)

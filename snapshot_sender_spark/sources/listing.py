@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..util import local_strings_df
+from ..util import fingerprint, local_strings_df, memo
 
 ENCRYPTION_META_SCHEMA = T.StructType(
     [
@@ -35,44 +35,11 @@ ENCRYPTION_META_SCHEMA = T.StructType(
     ]
 )
 
-# Reader-handle memos (r13, guide §1.2 driver-side constants): building the
-# sidecar JSON reader and especially the binaryFile reader re-runs driver-side
-# file listing (InMemoryFileIndex) on every call — ~0.1-0.2 s per
-# build_decrypted invocation for plan handles over *identical* inputs. Unlike
-# the read-only testdata tables (tables._LOAD_CACHE), a delivery input dir CAN
-# change between calls (fixtures regenerate, tests append objects), so a hit
-# additionally requires a filesystem FINGERPRINT match: the (name, mtime_ns,
-# size) set of the matching files, captured by a driver-side scandir that
-# costs ~0.2 ms per 100 objects. A changed/deleted/added file changes the
-# fingerprint and forces a fresh reader. DataFrames here are logical plan
-# handles — no data is cached; every execution rescans the files.
-_META_CACHE: dict[str, tuple] = {}
-_FILES_CACHE: dict[str, tuple] = {}
-
-
-def _dir_fingerprint(paths: list[str]) -> tuple:
-    out = []
-    for p in paths:
-        try:
-            st = os.stat(p)
-            out.append((p, st.st_mtime_ns, st.st_size))
-        except OSError:
-            out.append((p, None, None))
-    return tuple(out)
-
-
-def _enc_listing(input_dir: str) -> list[str]:
-    """Top-level ``*.enc`` files plus any subdirectories (the binaryFile
-    source can descend into partition-style subdirs; a subdir's mtime changes
-    whenever an entry is added/removed inside it, so including the dirs keeps
-    the fingerprint sensitive to nested changes)."""
-    try:
-        with os.scandir(input_dir) as it:
-            return sorted(
-                e.path for e in it if e.name.endswith(".enc") or e.is_dir()
-            )
-    except OSError:
-        return []
+# Reader-handle memos: building the sidecar JSON reader and the binaryFile
+# reader re-runs driver-side file listing (~0.1-0.2 s per build_decrypted
+# call). A delivery input dir CAN change between calls, so a hit also needs
+# an unchanged ``util.fingerprint`` of the input (one scandir walk, ~0.2 ms
+# per 100 objects). The memoized DataFrames are plan handles, not data.
 
 
 def read_encryption_meta(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -80,15 +47,11 @@ def read_encryption_meta(spark: SparkSession, input_dir: str) -> DataFrame:
     the S3 user-metadata side of the source (S3DirectoryReader.kt:86-98),
     tiny: one short row per object."""
     sidecar = os.path.join(input_dir, "metadata.sidecar.jsonl")
-    fp = _dir_fingerprint([sidecar])
-    cached = _META_CACHE.get(input_dir)
-    if cached is not None and cached[0] is spark and cached[1] == fp:
-        return cached[2]
-    df = spark.read.schema(ENCRYPTION_META_SCHEMA).json(sidecar)
-    if len(_META_CACHE) >= 128:
-        _META_CACHE.clear()
-    _META_CACHE[input_dir] = (spark, fp, df)
-    return df
+    return memo(
+        "listing.meta", spark, (input_dir,),
+        lambda: spark.read.schema(ENCRYPTION_META_SCHEMA).json(sidecar),
+        lambda: fingerprint(sidecar),
+    )
 
 
 def read_encrypted_files(
@@ -99,12 +62,8 @@ def read_encrypted_files(
     (DomainClasses.kt:10-32). ``meta``: pass an already-built
     ``read_encryption_meta`` DataFrame to avoid a second reader round trip
     for the same sidecar (callers that also need the key-distinct source)."""
-    fp = _dir_fingerprint(_enc_listing(input_dir))
-    cached = _FILES_CACHE.get(input_dir)
-    if cached is not None and cached[0] is spark and cached[1] == fp:
-        objects = cached[2]
-    else:
-        objects = (
+    def scan() -> DataFrame:
+        return (
             spark.read.format("binaryFile")
             .option("pathGlobFilter", "*.enc")
             .load(input_dir)
@@ -115,9 +74,10 @@ def read_encrypted_files(
                 F.col("content"),
             )
         )
-        if len(_FILES_CACHE) >= 128:
-            _FILES_CACHE.clear()
-        _FILES_CACHE[input_dir] = (spark, fp, objects)
+
+    objects = memo(
+        "listing.files", spark, (input_dir,), scan, lambda: fingerprint(input_dir)
+    )
     if meta is None:
         meta = read_encryption_meta(spark, input_dir)
     # metadata side is tiny (one short row per object) → broadcast

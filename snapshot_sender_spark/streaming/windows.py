@@ -19,6 +19,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..tables import decode_events_ts
+from ..util import memo
+
 
 def _events_stream_dir(sf_dir: str) -> str:
     """The file-stream source wants a directory; expose the single parquet file
@@ -49,35 +52,21 @@ def _events_stream_dir(sf_dir: str) -> str:
     return d
 
 
-# (sf_dir) -> (session, raw events schema): the batch-side schema probe is a
-# footer read (~100-250 ms via spark.read.parquet); the schema of the
-# read-only fixture cannot change within a session, so memoize it the same
-# way tables._LOAD_CACHE memoizes plan handles (identity-checked session).
-_EVENTS_SCHEMA_CACHE: dict[str, tuple[SparkSession, object]] = {}
-
-
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # nanos→micros conversion as in tables.load (the conf is set there);
-    # newer testdata generations store ts as TIMESTAMP(MICROS) directly.
-    from pyspark.sql import types as T
-
+    # the raw schema probe is a footer read (~100-250 ms via
+    # spark.read.parquet); the read-only fixture's schema cannot change
+    # within a session, so it is memoized per session like tables.load
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    cached = _EVENTS_SCHEMA_CACHE.get(sf_dir)
-    if cached is not None and cached[0] is spark:
-        schema = cached[1]
-    else:
-        schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        _EVENTS_SCHEMA_CACHE[sf_dir] = (spark, schema)
+    schema = memo(
+        "windows.events_schema", spark, (sf_dir,),
+        lambda: spark.read.parquet(f"{sf_dir}/events.parquet").schema,
+    )
     stream = (
         spark.readStream.schema(schema)
         .format("parquet")
         .load(_events_stream_dir(sf_dir))
     )
-    if isinstance(schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return decode_events_ts(stream, schema)
 
 
 ROCKSDB_PROVIDER = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"

@@ -4,8 +4,14 @@ from __future__ import annotations
 
 import os
 import shutil
+import stat
 import tempfile
+import threading
+from collections import OrderedDict
 from collections.abc import Callable
+from typing import TypeVar
+
+T = TypeVar("T")
 
 
 def write_once(final_dir: str, write_fn: Callable[[str], None], probe: str | None = None) -> None:
@@ -79,25 +85,118 @@ def local_strings_df(spark, rows, colnames):
     return spark.sql(f"SELECT * FROM VALUES {values} AS t({cols})")
 
 
-# DataFrame-independent Column expression trees, memoized per JVM gateway
-# (r14, guide §1.2 driver-side constants): a Column is an immutable handle on
-# an UNRESOLVED expression — it binds to whatever DataFrame it is later used
-# with — but BUILDING one pays a synchronous py4j round trip per helper call
-# (F.when/F.concat/...). Builders that assemble large expression trees every
-# lap (the URL-canonicalization family spends ~2-4k trips per build) can
-# build them once per JVM and reuse. Keyed on the py4j gateway object
-# (identity-checked), so a restarted JVM can never see stale handles.
-_EXPR_CACHE: dict = {}
+# One memo primitive for every driver-side cache in the package: logical plan
+# handles, Column trees, strategy statistics, trained models. Nothing here
+# holds data — a memoized DataFrame is a plan handle, and every execution
+# still scans its files. An entry hits only when (a) its owner IS the caller's
+# owner (the SparkSession for DataFrames and statistics, the py4j gateway for
+# Column trees), so two live sessions or a restarted JVM never alias; (b) the
+# tuple key is equal; (c) ``validate()``, when given, equals the value stored
+# with the entry (e.g. a filesystem ``fingerprint``). Each scope is one LRU
+# bounded by MEMO_BOUND.
+MEMO_BOUND = 256
 
 
-def session_exprs(spark, key: str, build: Callable[[], tuple]):
-    """Return ``build()``'s tuple of Columns, memoized per (JVM gateway, key)."""
-    gw = spark.sparkContext._gateway
-    hit = _EXPR_CACHE.get(key)
-    if hit is not None and hit[0] is gw:
-        return hit[1]
-    cols = build()
-    if len(_EXPR_CACHE) >= 256:
-        _EXPR_CACHE.clear()
-    _EXPR_CACHE[key] = (gw, cols)
-    return cols
+class _Scope:
+    __slots__ = ("entries", "hits", "misses")
+
+    def __init__(self) -> None:
+        self.entries: OrderedDict = OrderedDict()  # key -> (owner, check, value)
+        self.hits = 0
+        self.misses = 0
+
+
+_SCOPES: dict[str, _Scope] = {}
+_MEMO_LOCK = threading.Lock()
+
+
+def memo(scope: str, owner, key: tuple, build: Callable[[], T],
+         validate: Callable[[], object] | None = None) -> T:
+    """Return the memoized ``build()`` for ``key`` in ``scope`` (see the
+    contract above); a miss builds outside the lock and replaces the entry."""
+    if not isinstance(key, tuple):
+        raise TypeError(f"memo key must be a tuple, got {type(key).__name__}")
+    check = validate() if validate is not None else None
+    with _MEMO_LOCK:
+        s = _SCOPES.get(scope) or _SCOPES.setdefault(scope, _Scope())
+        entry = s.entries.get(key)
+        if entry is not None and entry[0] is owner and entry[1] == check:
+            s.entries.move_to_end(key)
+            s.hits += 1
+            return entry[2]
+        s.misses += 1
+    value = build()
+    with _MEMO_LOCK:
+        s.entries[key] = (owner, check, value)
+        s.entries.move_to_end(key)
+        while len(s.entries) > MEMO_BOUND:
+            s.entries.popitem(last=False)
+    return value
+
+
+def memo_stats() -> dict[str, dict[str, int]]:
+    """Per-scope ``{"hits", "misses", "size"}`` counters."""
+    with _MEMO_LOCK:
+        return {
+            name: {"hits": s.hits, "misses": s.misses, "size": len(s.entries)}
+            for name, s in _SCOPES.items()
+        }
+
+
+def memo_clear(scope: str) -> None:
+    """Drop the entries and counters of one scope."""
+    with _MEMO_LOCK:
+        _SCOPES.pop(scope, None)
+
+
+def plan_memo(scope: str, df, build: Callable[[], T]) -> T:
+    """``memo`` keyed on ``df``'s logical plan (``semanticHash``), owned by
+    its session: the role cached table statistics play in a cost-based
+    optimizer. For decision-only values (every strategy they pick is
+    result-identical), so a table rewritten in place under the same plan
+    within one session reuses the old value, and a plan whose hash cannot be
+    computed simply builds."""
+    try:
+        key = (df.semanticHash(),)
+    except Exception:
+        return build()
+    return memo(scope, df.sparkSession, key, build)
+
+
+def fingerprint(path: str) -> tuple | None:
+    """Filesystem validator for memoized readers: ``(mtime_ns, size)`` for a
+    file; for a directory the sorted ``(relpath, mtime_ns, size)`` of every
+    file beneath it at any depth, so an edit inside a nested partition
+    directory changes it too. None when unstatable."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_mtime_ns, st.st_size)
+    out = []
+    pending = [""]
+    try:
+        while pending:
+            rel = pending.pop()
+            with os.scandir(os.path.join(path, rel)) as it:
+                for e in it:
+                    r = os.path.join(rel, e.name)
+                    if e.is_dir(follow_symlinks=False):
+                        pending.append(r)
+                    else:
+                        est = e.stat()
+                        out.append((r, est.st_mtime_ns, est.st_size))
+    except OSError:
+        return None
+    return tuple(sorted(out))
+
+
+def session_exprs(spark, key: tuple, build: Callable[[], tuple]) -> tuple:
+    """Return ``build()``'s tuple of DataFrame-independent Columns, memoized
+    per (JVM gateway, key). A Column is an immutable handle on an UNRESOLVED
+    expression, but building one pays a py4j round trip per helper call
+    (the URL-canonicalization trees cost ~2-4k trips), so builders that
+    assemble them every lap build them once per JVM; a restarted JVM has a
+    new gateway and never sees stale handles."""
+    return memo("session_exprs", spark.sparkContext._gateway, key, build)

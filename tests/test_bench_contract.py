@@ -6,6 +6,8 @@ import json
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import bench  # noqa: E402
@@ -143,3 +145,13 @@ def test_load_gate_is_self_load_aware(monkeypatch):
     assert sum(slept) == 15.0
     bench._self_anchor[0] = None
     bench._wait_budget[0] = bench.MAX_WAIT_S
+
+
+def test_run_copy_refuses_same_second_overwrite(tmp_path):
+    """Two runs stamped in the same second get the same per-run name; the
+    second write must fail loudly and leave the first run's record intact."""
+    name = "BENCH_DETAIL_c4_sf0.1_20260101T000000Z.json"
+    path = bench.write_run_copy(str(tmp_path), name, {"run": 1})
+    with pytest.raises(FileExistsError):
+        bench.write_run_copy(str(tmp_path), name, {"run": 2})
+    assert json.loads(Path(path).read_text()) == {"run": 1}

@@ -139,3 +139,43 @@ def test_gc_freeze_guard_worker_scope_and_semantics():
         gc.unfreeze()
         if not had_worker and sys.modules.get("pyspark.worker") is sys:
             del sys.modules["pyspark.worker"]
+
+
+def test_gc_freeze_gate_warns_once_without_daemon_caller(monkeypatch):
+    """A gate that never sees the daemon's between-task collect can never
+    freeze; after GC_FREEZE_WARN_AFTER such collects the wrapper says so
+    exactly once, and a later daemon collect still freezes."""
+    import gc
+    import warnings
+
+    from snapshot_sender_spark import pyboundary
+
+    monkeypatch.setattr(pyboundary, "GC_FREEZE_WARN_AFTER", 3)
+    had_worker = "pyspark.worker" in sys.modules or "pyspark.daemon" in sys.modules
+    if not had_worker:
+        sys.modules["pyspark.worker"] = sys  # sentinel module object
+    orig_collect = gc.collect
+    orig_freeze = gc.freeze
+    freeze_calls = []
+    try:
+        assert pyboundary.install_worker_gc_freeze() is True
+        gc.freeze = lambda: freeze_calls.append(1)
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            for _ in range(2):
+                gc.collect()
+            assert caught == []
+            for _ in range(3):
+                gc.collect()
+            gate = [w for w in caught if "gc-freeze gate" in str(w.message)]
+            assert len(gate) == 1 and gate[0].category is RuntimeWarning
+        assert freeze_calls == []
+        _collect_as_daemon()
+        assert freeze_calls == [1]
+    finally:
+        gc.freeze = orig_freeze
+        gc.collect = orig_collect
+        if getattr(gc, "_ssp_freeze_wrapper", False):
+            del gc._ssp_freeze_wrapper
+        if not had_worker and sys.modules.get("pyspark.worker") is sys:
+            del sys.modules["pyspark.worker"]

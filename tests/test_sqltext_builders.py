@@ -371,7 +371,7 @@ def test_curation_expr_memo_plan_identity(spark, name):
     from snapshot_sender_spark import util
 
     fn = all_queries()[name].fn
-    util._EXPR_CACHE.clear()
+    util.memo_clear("session_exprs")
     cold = fn(spark, SF)  # rebuilds the expression trees
     warm = fn(spark, SF)  # memo hit
     co = cold._jdf.queryExecution().optimizedPlan()
@@ -387,7 +387,7 @@ def test_shingle_expr_memo_plan_identity(spark):
     from snapshot_sender_spark.operators import dedup
 
     d = load(spark, SF, "documents")
-    util._EXPR_CACHE.clear()
+    util.memo_clear("session_exprs")
     cold = dedup.hashed_shingle_sets(d, "text", "doc_id")
     warm = dedup.hashed_shingle_sets(d, "text", "doc_id")
     co = cold._jdf.queryExecution().optimizedPlan()
